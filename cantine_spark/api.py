@@ -517,11 +517,14 @@ class SearchEngine:
     # ---------------------------------------------------------- search_batch
     def search_batch(self, queries: list[SearchQuery | dict]
                      ) -> list[SearchResult | BadRequest]:
-        """Answer a micro-batch of queries with at most two kernel Spark
-        jobs plus ONE shared hydration scan (FastTopK.search_many has the
-        full rationale: every driver-scheduled job pays a fixed ~100-200 ms
-        floor, so batching N concurrent queries amortizes it N-fold —
-        the serving-throughput lever behind httpserve.QueryBatcher).
+        """Answer a micro-batch of queries with ONE shared hydration scan
+        and at most two kernel Spark jobs — none when the driver tier
+        takes the whole batch. FastTopK.search_many has the full
+        rationale: the batch's smallest queries drive while their summed
+        postings fit one solo query's driver budget (same admission rule
+        as search()), and the rest share one kernel job, amortizing the
+        fixed ~100-200 ms per-job floor N-fold — the serving-throughput
+        lever behind httpserve.QueryBatcher.
 
         Per-query results are identical to search() (differential-tested).
         Shapes the batch kernel does not cover run solo transparently:

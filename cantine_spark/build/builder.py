@@ -60,6 +60,7 @@ doc shards. Per-partition row metrics land in the manifest.
 from __future__ import annotations
 
 import hashlib
+import logging
 import os
 import time
 from concurrent.futures import ThreadPoolExecutor
@@ -70,6 +71,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from cantine_spark import fsutil
+
+_log = logging.getLogger(__name__)
 
 TEXT_FIELDS = ("content", "path")  # multi-field index (C6 analog of
 # cantine's name/ingredients/instructions, cantine/src/index.rs:195-197)
@@ -533,36 +536,51 @@ class IndexBuilder:
         ts_path = os.path.join(self.index_dir, "term_stats")
         postings_prebuilt = (not force) and _stage_done(post_path, fingerprint)
         with ThreadPoolExecutor(max_workers=4) as pool:
-            docs_future = pool.submit(stage_docs)
+            # uuid_map reads the written docs table: one sequential task
+            docs_uuid_future = pool.submit(
+                lambda: (stage_docs(), stage_uuid_map()))
             docmeta_future = pool.submit(stage_docmeta)
             postings_future = pool.submit(stage_postings)
-            uuid_future = pool.submit(
-                lambda: (docs_future.result(), stage_uuid_map()))
-            docmeta_future.result()
-            stage_index_stats()
-            seg_src = (None if postings_prebuilt
-                       else self._postings_df(tokenized))
-            run_stage("segments", seg_path,
-                      lambda: build_segments(spark, self.index_dir,
-                                             n_docs=n_docs,
-                                             postings_df=seg_src))
-            # term_stats: df/cf per (field, term, bucket) — ONE agg over
-            # the small champion sidecar (exactly one row per (field, term,
-            # shard) carrying the group's full df/cf), replacing the old
-            # full postings re-scan. Same layout, same values.
-            run_stage("term_stats", ts_path, lambda: (
-                spark.read.parquet(os.path.join(self.index_dir, "champions"))
-                .groupBy("field", "term")
-                .agg(F.sum("n_total").cast("long").alias("df"),
-                     F.sum("cf").cast("long").alias("cf"))
-                .withColumn("bucket",
-                            bucket_expr(F.col("field"), F.col("term")))
-                .repartition(self.n_buckets, "bucket")
-                .sortWithinPartitions("bucket", "field", "term")
-                .write.mode("overwrite").partitionBy("bucket")
-                .parquet(ts_path)))
-            postings_future.result()
-            uuid_future.result()
+            futures = {"docs/uuid_map": docs_uuid_future,
+                       "docmeta": docmeta_future,
+                       "postings": postings_future}
+            try:
+                docmeta_future.result()
+                stage_index_stats()
+                seg_src = (None if postings_prebuilt
+                           else self._postings_df(tokenized))
+                run_stage("segments", seg_path,
+                          lambda: build_segments(spark, self.index_dir,
+                                                 n_docs=n_docs,
+                                                 postings_df=seg_src))
+                # term_stats: df/cf per (field, term, bucket) — ONE agg over
+                # the small champion sidecar (exactly one row per (field,
+                # term, shard) carrying the group's full df/cf), replacing
+                # the old full postings re-scan. Same layout, same values.
+                run_stage("term_stats", ts_path, lambda: (
+                    spark.read.parquet(
+                        os.path.join(self.index_dir, "champions"))
+                    .groupBy("field", "term")
+                    .agg(F.sum("n_total").cast("long").alias("df"),
+                         F.sum("cf").cast("long").alias("cf"))
+                    .withColumn("bucket",
+                                bucket_expr(F.col("field"), F.col("term")))
+                    .repartition(self.n_buckets, "bucket")
+                    .sortWithinPartitions("bucket", "field", "term")
+                    .write.mode("overwrite").partitionBy("bucket")
+                    .parquet(ts_path)))
+                postings_future.result()
+                docs_uuid_future.result()
+            except Exception:
+                # surface every concurrent writer's failure, not only the
+                # first one this thread happened to wait on
+                for name, fut in futures.items():
+                    try:
+                        fut.result()
+                    except Exception as e:  # noqa: BLE001
+                        _log.error("build stage %s failed: %r", name, e,
+                                   exc_info=e)
+                raise
 
         # per-partition metrics: rows per bucket (skew visibility) — derived
         # from term_stats (Σdf per bucket, a 64-group agg over the small

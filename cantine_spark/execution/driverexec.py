@@ -17,11 +17,11 @@ with pyarrow and executes the UNMODIFIED per-shard kernel closure
 by construction because it is the same code over the same rows.
 
 100-TB semantics — this is a *tier*, not a toy:
-- The budget is in absolute postings (default 2^17 ≈ a few MB of blocks),
-  not a fraction of the corpus. On a 10^12-doc index a hot term exceeds
-  it instantly and takes the cluster kernel, unchanged; a tail term is 3
-  blocks there too, and THOSE are the queries a 1000-executor cluster
-  should not burn a distributed job on.
+- The budget is in absolute postings (default 2^18 ≈ low-double-digit MB
+  of blocks), not a fraction of the corpus. On a 10^12-doc index a hot
+  term exceeds it instantly and takes the cluster kernel, unchanged; a
+  tail term is 3 blocks there too, and THOSE are the queries a
+  1000-executor cluster should not burn a distributed job on.
 - Reads route through pyarrow.dataset over fsutil-resolved filesystems,
   so the same point reads work on s3://, hdfs://, file:// (VERDICT r5
   "what's wrong" #2 discipline). Parquet row-group statistics on the
@@ -29,8 +29,10 @@ by construction because it is the same code over the same rows.
   per term; dataset objects (file listings + footers) are cached per
   immutable index dir, so steady-state cost is stat-pruned row-group
   reads only.
-- The driver holds at most `budget` postings per query plus a bounded
-  row cache — it never materializes anything O(corpus).
+- The driver holds at most `budget` postings per query — per micro-batch
+  on the batched path, which drives its smallest queries while their
+  cumulative postings fit the same budget — plus a bounded row cache;
+  it never materializes anything O(corpus).
 
 Fallback discipline (same as the hydration/df/cursor point-read family):
 any failure falls through to the cluster kernel — one slower query,
@@ -90,8 +92,9 @@ _DS_CACHE_CAP = 32
 _ROW_CACHE: dict[tuple, pd.DataFrame] = {}
 _ROW_CACHE_CAP = 64
 # concurrent driver executions (admission permits 2 mid-size + unlimited
-# tiny) share these dicts — unsynchronized FIFO eviction raced two threads
-# onto the same pop key (ADVICE r6)
+# tiny, solo queries and micro-batches alike) share these dicts —
+# unsynchronized FIFO eviction raced two threads onto the same pop key
+# (ADVICE r6)
 _CACHE_LOCK = threading.Lock()
 
 

@@ -50,9 +50,12 @@ per-kernel working set; size span explicitly when executors are small.
 
 from __future__ import annotations
 
+import bisect
+import itertools
 import logging
 import os
 import threading
+from contextlib import contextmanager
 from dataclasses import dataclass, field as dc_field
 
 import numpy as np
@@ -1592,9 +1595,10 @@ class FastTopK:
     # application to the cached relation (surprising for plan inspection).
     pin_tables: bool = False
     # driver-tier execution (execution/driverexec): queries whose terms'
-    # TOTAL posting count fits under driver_max_postings are answered by a
-    # pyarrow point read + the same kernel closure run locally — zero Spark
-    # jobs, bit-equal results, cluster-kernel fallback on any failure.
+    # TOTAL posting count fits under driver_max_postings (for a
+    # micro-batch: its smallest queries while their SUM fits) are answered
+    # by a pyarrow point read + the same kernel closure run locally — zero
+    # Spark jobs, bit-equal results, cluster-kernel fallback on any failure.
     # use_driver=False forces every query onto the cluster kernel (plan
     # tests; bench's forced-cluster comparison leg).
     use_driver: bool = True
@@ -1613,15 +1617,16 @@ class FastTopK:
             self.executor = SearchExecutor(self.reader)
         self.avgdl_by_field = {f: s["avgdl"]
                                for f, s in self.reader.stats.items()}
-        # concurrency admission for MID-SIZE driver-tier queries (see the
-        # gate in search()): at most 2 GIL-bound driver executions in
+        # concurrency admission for MID-SIZE driver-tier work (see
+        # _driver_admission): at most 2 GIL-bound driver executions in
         # flight; excess concurrent callers spill to the cluster kernel,
         # which parallelizes across executors instead of one interpreter
         self._driver_permits = threading.Semaphore(self.driver_permits)
-        # concurrent search() calls in this engine right now — the LARGE
-        # driver-tier admission gate (see search()): large queries only
-        # drive when nothing else is in flight, so their ~200 ms of held
-        # GIL can never starve concurrent serving traffic
+        # concurrent search()/search_many() calls in this engine right now
+        # — the LARGE driver-tier admission gate (see _driver_admission):
+        # large driven totals only drive when nothing else is in flight,
+        # so their ~200 ms of held GIL can never starve concurrent
+        # serving traffic
         self._inflight = 0
         self._inflight_lock = threading.Lock()
         # latency knobs for the tiny kernel shuffle (measured at local[32],
@@ -1821,15 +1826,70 @@ class FastTopK:
         """Public entry — tracks in-flight concurrency around _search (the
         large driver-tier admission gate reads it); see _search for the
         full contract."""
-        with self._inflight_lock:
-            self._inflight += 1
-        try:
+        with self._in_flight():
             return self._search(node, k, after, ascending, preds,
                                 sort_feature, seed_min, agg_query,
                                 range_filters, use_champions)
+
+    @contextmanager
+    def _in_flight(self):
+        """Count one search()/search_many() call in _inflight while it
+        runs — a micro-batch counts once, like a solo query."""
+        with self._inflight_lock:
+            self._inflight += 1
+        try:
+            yield
         finally:
             with self._inflight_lock:
                 self._inflight -= 1
+
+    @contextmanager
+    def _driver_admission(self, postings: list[int]):
+        """THE driver-tier admission rule, shared by search() (one entry)
+        and search_many() (one entry per driver-eligible batch query, in
+        ascending order). Yields n: drive the first n entries on the
+        driver, send the rest to the cluster kernel. Permits taken for the
+        decision are held until the with-block exits.
+
+        The driven total is the longest prefix whose cumulative postings
+        fit driver_max_postings, so a micro-batch never does more driver
+        work than one solo query may. Driver execution is GIL-bound numpy
+        on ONE process: N concurrent mid-size driver executions serialize
+        while the cluster sits idle (measured: 16-thread unbatched HTTP
+        qps collapsed 9.2 → 1.6 when every query drove). Three tiers on
+        the driven total, crossover-sized:
+        - tiny (≤ min(DRIVER_TINY_POSTINGS, budget/8), ~10 ms): always
+          drive — even fully serialized it out-throughputs a scheduler
+          round-trip;
+        - mid (≤ budget/2, ≲100 ms): needs ONE free permit right now
+          (non-blocking);
+        - large (≤ budget, ~100-250 ms of GIL): needs EVERY permit and an
+          otherwise idle engine — fine solo (0.19 s vs 0.45-0.53 s
+          cluster, measured) but flat-admitting them under concurrency
+          dropped 16-thread qps 8.1 → 5.0.
+        A total that is refused falls back to its tiny prefix."""
+        budget = self.driver_max_postings
+        tiny_cap = min(driverexec.DRIVER_TINY_POSTINGS, budget // 8)
+        cum = list(itertools.accumulate(postings))
+        n = bisect.bisect_right(cum, budget)
+        total = cum[n - 1] if n else 0
+        large = total > budget // 2
+        need = (0 if total <= tiny_cap
+                else self.driver_permits if large else 1)
+        got = 0
+        if not (large and self._inflight > 1):
+            while got < need and self._driver_permits.acquire(blocking=False):
+                got += 1
+        if got < need:
+            for _ in range(got):
+                self._driver_permits.release()
+            got = 0
+            n = bisect.bisect_right(cum, tiny_cap)
+        try:
+            yield n
+        finally:
+            for _ in range(got):
+                self._driver_permits.release()
 
     def _search(self, node: QueryNode, k: int = 10,
                 after: tuple[float, int] | None = None,
@@ -1922,55 +1982,25 @@ class FastTopK:
                       and after is None and not ascending
                       and sort_feature is None and not preds
                       and champ_tree_ok(node))
-        # driver tier: when the query's total posting count fits under the
-        # budget, point-read exactly those rows and run the same kernel
-        # closure locally — zero Spark jobs (module rationale in
-        # execution/driverexec). Cluster fallback on any failure.
-        #
-        # ADMISSION under concurrency: driver execution is GIL-bound numpy
-        # on ONE process, so N concurrent mid-size driver queries serialize
-        # while the 32-core cluster sits idle — measured: 16-thread
-        # unbatched HTTP qps collapsed 9.2 → 1.6 when every suite query
-        # drove. Three tiers (r7, crossover-sized — VERDICT r6 #3):
-        # - tiny (≤ budget/8, ~10 ms): always drive — even fully serialized
-        #   they out-throughput a scheduler round-trip;
-        # - mid (≤ budget/2, ≲100 ms): need ONE free permit RIGHT NOW
-        #   (non-blocking), else cluster;
-        # - large (≤ budget, ~100-250 ms of GIL): need EVERY permit — they
-        #   drive when the tier is otherwise idle (solo latency 0.19 s vs
-        #   0.45-0.53 s cluster, measured) but spill under concurrency
-        #   (measured: flat-admitting them dropped 16-thread qps 8.1 → 5.0).
-        # Latency-optimal solo, throughput-safe at saturation, no tuning
-        # knob that breaks at a different load.
-        total_postings = sum(dfs[ft] for ft in live)
+        # driver tier: when the query's total posting count is admitted
+        # (_driver_admission — budget + concurrency tiers), point-read
+        # exactly those rows and run the same kernel closure locally —
+        # zero Spark jobs (module rationale in execution/driverexec).
+        # Cluster fallback on any failure.
         if (self.use_driver and not preds
-                and (sort_feature is None or use_ff_sort)
-                and total_postings <= self.driver_max_postings):
-            tiny = total_postings <= min(driverexec.DRIVER_TINY_POSTINGS,
-                                         self.driver_max_postings // 8)
-            large = total_postings > self.driver_max_postings // 2
-            need = 0 if tiny else self.driver_permits if large else 1
-            # large queries additionally require an otherwise-idle engine:
-            # holding every permit for ~200 ms of GIL is fine solo but
-            # starves concurrent serving traffic (measured 8.1 → 5.0 qps)
-            got = 0
-            if not (large and self._inflight > 1):
-                while (got < need
-                       and self._driver_permits.acquire(blocking=False)):
-                    got += 1
-            try:
-                if got == need:
-                    return self._driver_search(
-                        node, live, idfs, k, after, ascending,
-                        sort_feature if use_ff_sort else None,
-                        agg_query, range_filters, seed_min,
-                        use_champs, empty_agg)
-            except Exception:
-                # unreadable path / stale layout → cluster kernel
-                _note_driver_fallback("search")
-            finally:
-                for _ in range(got):
-                    self._driver_permits.release()
+                and (sort_feature is None or use_ff_sort)):
+            with self._driver_admission(
+                    [sum(dfs[ft] for ft in live)]) as n:
+                if n:
+                    try:
+                        return self._driver_search(
+                            node, live, idfs, k, after, ascending,
+                            sort_feature if use_ff_sort else None,
+                            agg_query, range_filters, seed_min,
+                            use_champs, empty_agg)
+                    except Exception:
+                        # unreadable path / stale layout → cluster kernel
+                        _note_driver_fallback("search")
         kernel = make_kernel(
             node, idfs, self.avgdl_by_field, k, after, ascending,
             seed_min=seed_min, with_meta=with_meta, sort_field=sort_feature,
@@ -2043,7 +2073,8 @@ class FastTopK:
 
     # -------------------------------------------------------- batched search
     def search_many(self, specs: list[dict]) -> list[KernelResult]:
-        """Answer a MICRO-BATCH of queries in at most TWO Spark jobs.
+        """Answer a MICRO-BATCH of queries with at most TWO Spark jobs —
+        zero when the driver tier takes the whole batch.
 
         Serving-throughput rationale: on a cluster, every kernel job pays a
         fixed scheduler + Python-worker round-trip (~100-200 ms here) that
@@ -2056,19 +2087,28 @@ class FastTopK:
         in-process tantivy searcher has no per-query scheduling floor).
 
         Each spec is a dict of search() kwargs (node required). Two shapes
-        fall back to one solo search() call for that spec: docmeta-cogroup
+        fall back to one solo search for that spec: docmeta-cogroup
         queries (preds, or a field sort on a pre-sidecar index) — absent in
         serving, where the sidecar always exists.
 
-        Job 1 serves every champion-eligible single-term query from the
-        champion sidecar (make_champion_batch_kernel, rows dispatched per
-        (field, term) → qids); the per-query lossless bound check is the
-        SAME _champ_verify as the single path, and failures drop into job 2.
-        Job 2 is ONE segment scan filtered to the UNION of every remaining
-        query's terms, grouped by shard; inside each task the rows are
-        sliced per query by (field, term) membership and dispatched to that
-        query's unmodified single-query kernel closure (make_kernel
-        raw=True), so per-query results are BIT-EQUAL to search()
+        Routing, in order:
+        - every champion-eligible single-term query is first served by a
+          driver-side champion read (bounded at cap postings per shard);
+          the per-query lossless bound check is the SAME _champ_verify as
+          the single path, and failures stay in the batch;
+        - ONE driver-tier decision for the batch: the remaining queries,
+          in ascending order of posting count, go through the same
+          _driver_admission rule as a solo search() — the longest prefix
+          whose cumulative postings fit driver_max_postings drives
+          (tiny prefix only when the permits are busy), so the batch
+          never does more GIL-bound driver work than one solo query may;
+        - job 1 serves champion-eligible queries whose driver read failed;
+        - job 2 is ONE segment scan filtered to the UNION of every
+          remaining query's terms, grouped by shard; inside each task the
+          rows are sliced per query by (field, term) membership and
+          dispatched to that query's unmodified single-query kernel
+          closure (make_kernel raw=True).
+        Per-query results are BIT-EQUAL to search() on every route
         (differential-tested, tests/test_batch.py). One scan regardless of
         batch depth keeps Catalyst planning O(1) in batch size (a per-query
         union branch made plan construction ~35% of batch wall time), and
@@ -2078,6 +2118,10 @@ class FastTopK:
         Column-pruning note: positions blobs are dropped when the whole
         batch is phrase-free, and NULLed (never read from parquet) for
         terms no phrase-bearing query needs."""
+        with self._in_flight():
+            return self._search_many(specs)
+
+    def _search_many(self, specs: list[dict]) -> list[KernelResult]:
         out: list[KernelResult | None] = [None] * len(specs)
         champ_direct: dict[int, tuple] = {}  # qid → (field, term, idf, fac, k)
         block: dict[int, dict] = {}          # qid → prepared context
@@ -2095,7 +2139,7 @@ class FastTopK:
             if sp.get("preds") or (sort_feature is not None
                                    and (self._ff_dir is None
                                         or sort_feature not in self._ff_cols)):
-                out[i] = self.search(**sp)
+                out[i] = self._search(**sp)
                 continue
             terms: set[tuple[str, str]] = set()
             collect_terms(node, terms)
@@ -2112,39 +2156,17 @@ class FastTopK:
                 out[i] = KernelResult(0, 0, [], agg=empty_agg)
                 continue
             self._check_sidecar_cover(agg_query, range_filters)
-            # driver tier for TINY queries only (budget/8): batched
-            # queries serve on ONE driver thread, so per-query driver cost
-            # must stay well under the shared batch kernel's amortized
-            # slice — a rare term (3 blocks, ~10 ms) wins, a hot 2-field
-            # DisMax (~100 ms of GIL-bound decode) would SERIALIZE the
-            # batch and collapse concurrent QPS (measured: 13.7 → 2.1 qps
-            # at 16 threads when every suite query driver-served in-batch).
-            # Solo search() keeps the full budget — one caller, latency-
-            # optimal either way.
-            if (self.use_driver
-                    and sum(dfs[ft] for ft in idfs)
-                    <= min(driverexec.DRIVER_TINY_POSTINGS,
-                           self.driver_max_postings // 8)):
-                use_champs = (use_champions and self._champ is not None
-                              and after is None and not ascending
-                              and sort_feature is None
-                              and champ_tree_ok(node))
-                try:
-                    out[i] = self._driver_search(
-                        node, set(idfs), idfs, k, after, ascending,
-                        sort_feature, agg_query, range_filters,
-                        int(sp.get("seed_min", SEED_MIN)),
-                        use_champs, empty_agg)
-                    continue
-                except Exception:
-                    _note_driver_fallback("search_many")
-            ctx = dict(node=node, k=k, after=after, ascending=ascending,
-                       sort_feature=sort_feature, agg_query=agg_query,
-                       range_filters=range_filters,
-                       seed_min=int(sp.get("seed_min", SEED_MIN)),
-                       idfs=idfs, live=set(idfs), empty_agg=empty_agg,
-                       use_champions=use_champions)
-            block[i] = ctx
+            block[i] = dict(
+                node=node, k=k, after=after, ascending=ascending,
+                sort_feature=sort_feature, agg_query=agg_query,
+                range_filters=range_filters,
+                seed_min=int(sp.get("seed_min", SEED_MIN)),
+                idfs=idfs, live=set(idfs), empty_agg=empty_agg,
+                postings=sum(dfs[ft] for ft in idfs),
+                use_champs=(use_champions and self._champ is not None
+                            and after is None and not ascending
+                            and sort_feature is None
+                            and champ_tree_ok(node)))
             if (use_champions and self._champ is not None and after is None
                     and not ascending and sort_feature is None
                     and not agg_query and not range_filters):
@@ -2158,8 +2180,9 @@ class FastTopK:
 
         # driver-side champion reads first (bounded at cap postings/shard
         # even for the hottest term): each served query leaves the batch;
-        # a verify-fail drops to job 2 exactly like the Spark shape. Only
-        # an unreadable sidecar path leaves entries for the Spark job 1.
+        # a verify-fail stays for the driver tier / job 2 exactly like the
+        # single path. Only an unreadable sidecar path leaves entries for
+        # the Spark job 1.
         if champ_direct and self.use_driver:
             for i in list(champ_direct):
                 f_, t_, idf, fac, k = champ_direct[i]
@@ -2173,6 +2196,24 @@ class FastTopK:
                 if res is not None:
                     res.driver_served = True
                     out[i] = res
+                    del block[i]
+
+        # driver tier: ONE admission decision for the whole batch
+        if self.use_driver:
+            order = sorted((c["postings"], i) for i, c in block.items()
+                           if i not in champ_direct)
+            with self._driver_admission([p for p, _ in order]) as n:
+                for _, i in order[:n]:
+                    c = block[i]
+                    try:
+                        out[i] = self._driver_search(
+                            c["node"], c["live"], c["idfs"], c["k"],
+                            c["after"], c["ascending"], c["sort_feature"],
+                            c["agg_query"], c["range_filters"],
+                            c["seed_min"], c["use_champs"], c["empty_agg"])
+                    except Exception:
+                        _note_driver_fallback("search_many")
+                        continue
                     del block[i]
 
         # job 1: every champion-eligible single-term query in one pass
@@ -2200,10 +2241,6 @@ class FastTopK:
             champ_terms: set[tuple[str, str]] = set()
             pos_terms: set[tuple[str, str]] = set()
             for i, c in block.items():
-                use_champs = (c["use_champions"] and self._champ is not None
-                              and c["after"] is None and not c["ascending"]
-                              and c["sort_feature"] is None
-                              and champ_tree_ok(c["node"]))
                 need_sidecar = (c["sort_feature"] is not None
                                 or bool(c["agg_query"])
                                 or bool(c["range_filters"]))
@@ -2219,10 +2256,10 @@ class FastTopK:
                     filter_spec={f: (float(lo), float(hi))
                                  for f, (lo, hi) in c["range_filters"].items()}
                     if c["range_filters"] else None,
-                    with_champs=use_champs, raw=True)
+                    with_champs=c["use_champs"], raw=True)
                 all_terms |= c["live"]
                 live_keys[i] = frozenset(c["live"])
-                if use_champs:
+                if c["use_champs"]:
                     champ_qids.add(i)
                     champ_terms |= c["live"]
                 if tree_has_phrase(c["node"]):

@@ -52,15 +52,17 @@ class _Pending:
 class QueryBatcher:
     """Micro-batch concurrent /search requests into engine.search_batch.
 
-    Every kernel query is a driver-scheduled Spark job with a fixed
-    ~100-200 ms floor, so under concurrent clients the DRIVER's job
-    pipeline saturates long before the executors do (bench.py: FAIR lifted
-    8-thread QPS to ~7; the floor still binds). Batching is the standard
-    next lever: requests arriving within a small window ride ONE kernel
-    job + ONE hydration scan (api.SearchEngine.search_batch), amortizing
-    the floor N-fold while leaving single-client latency almost untouched
-    (the window only opens after a first request is already in hand, so a
-    lone client pays ≤ window_ms extra on a ~400 ms query).
+    Every cluster-kernel query is a driver-scheduled Spark job with a
+    fixed ~100-200 ms floor, so under concurrent clients the DRIVER's job
+    pipeline saturates long before the executors do. Batching is the
+    standard lever: requests arriving within a small window ride ONE
+    hydration scan and one driver-tier admission decision
+    (api.SearchEngine.search_batch) — the batch's smallest queries run on
+    the driver while their summed postings fit one solo query's budget,
+    and only the rest share ONE kernel job — amortizing the floor N-fold
+    while leaving single-client latency almost untouched (the window only
+    opens after a first request is already in hand, so a lone client pays
+    ≤ window_ms extra on a query that takes tens of ms on the driver).
 
     Error isolation: each request is parsed individually — a BadRequest
     fails only its own request, never the batch. The engine is resolved

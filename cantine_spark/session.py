@@ -14,6 +14,19 @@ from pyspark.sql import SparkSession
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 
+def _default_driver_mem() -> str:
+    """Default driver heap: 16g, capped at ~40% of physical memory. The heap
+    is pinned (-Xms = -Xmx) and pre-touched, so an uncapped 16g on a box
+    with ~16 GB of RAM gets the JVM OOM-killed before the gateway opens."""
+    cap_mb = 16 * 1024
+    try:
+        phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+        cap_mb = min(cap_mb, int(phys * 0.4) >> 20)
+    except (ValueError, OSError, AttributeError):
+        pass  # sysconf name unavailable on this platform: keep 16g
+    return f"{cap_mb}m"
+
+
 def get_spark(
     app_name: str = "cantine_spark",
     cores: int | None = None,
@@ -29,6 +42,7 @@ def get_spark(
     """
     cores = cores or DEFAULT_CPUS
     shuffle = shuffle_partitions or cores
+    driver_mem = os.environ.get("SPARK_DRIVER_MEM") or _default_driver_mem()
     builder = (
         SparkSession.builder.appName(app_name)
         .master(f"local[{cores}]")
@@ -41,7 +55,7 @@ def get_spark(
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", driver_mem)
         .config("spark.memory.fraction", "0.7")
         # Pin + pre-touch the heap and use a non-uncommitting GC: G1's
         # region commit/uncommit churn caused TLB-shootdown IPI storms at
@@ -50,7 +64,8 @@ def get_spark(
         # to 47s with this alone.
         .config("spark.driver.extraJavaOptions",
                 os.environ.get("SPARK_DRIVER_JAVA_OPTS",
-                               "-Xms16g -XX:+AlwaysPreTouch -XX:+UseParallelGC"))
+                               f"-Xms{driver_mem} -XX:+AlwaysPreTouch "
+                               "-XX:+UseParallelGC"))
         # direct task commits: no serial driver-side rename of hundreds of
         # bucket files at job commit
         .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version", "2")

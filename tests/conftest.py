@@ -21,7 +21,12 @@ N_DOCS = 150  # small enough for fast tests, large enough for skew/ties
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark("cantine-tests", cores=4, shuffle_partitions=4)
+    # reused Python workers: the suite runs hundreds of tiny UDF jobs, and
+    # a fresh worker per task re-imports pandas/pyarrow every time (~20%
+    # of suite wall time at local[4]); session.py keeps reuse off for the
+    # local[32] kernel-spin it was measured against
+    s = get_spark("cantine-tests", cores=4, shuffle_partitions=4,
+                  extra_conf={"spark.python.worker.reuse": "true"})
     yield s
 
 

@@ -199,11 +199,141 @@ def test_batched_all_driver_and_mixed(pair, reader):
     assert not any(x.driver_served for x in rb)
     for x, y in zip(ra, rb):
         _same(x, y)
-    # mixed: budget excludes the batch path per-query, not whole-batch
+    # a 1-posting budget admits no batch query to the driver tier; the
+    # results stay equal
     tiny = FastTopK(reader, driver_max_postings=1)
     rt = tiny.search_many(specs)
     for x, y in zip(rt, rb):
         _same(x, y)
+
+
+# batch-tier specs: multi-leaf trees and a field sort, none of them
+# champion-direct (single-term relevance page-1 queries are served by the
+# champion read before the driver-tier decision)
+BATCH_SPECS = [
+    {"node": SHAPES["dismax"], "k": 4},
+    {"node": SHAPES["boolean"], "k": 5},
+    {"node": SHAPES["phrase"], "k": 3},
+    {"node": SHAPES["term"], "k": 5, "sort_feature": "num_lines"},
+]
+
+
+def _spec_postings(fd, spec):
+    from cantine_spark.execution.wand import collect_terms
+
+    terms: set = set()
+    collect_terms(spec["node"], terms)
+    return sum(fd.executor.term_dfs(terms).values())
+
+
+def _ascending(fd, specs):
+    """(postings, qid) in the order the batch tier considers them."""
+    return sorted((_spec_postings(fd, sp), i) for i, sp in enumerate(specs))
+
+
+def _prefix(order, cap):
+    """qids of the longest ascending prefix whose cumulative postings
+    fit cap."""
+    out, cum = set(), 0
+    for p, i in order:
+        cum += p
+        if cum > cap:
+            break
+        out.add(i)
+    return out
+
+
+def test_batch_mid_tier_total_fully_driven(pair, reader):
+    """A micro-batch whose SUMMED postings sit in the mid tier (budget/8 <
+    total ≤ budget/2) is admitted with one permit and driven whole."""
+    fd, fc = pair
+    total = sum(p for p, _ in _ascending(fd, BATCH_SPECS))
+    mid = FastTopK(reader, driver_max_postings=2 * total)
+    ra, rb = mid.search_many(BATCH_SPECS), fc.search_many(BATCH_SPECS)
+    assert all(x.driver_served for x in ra)
+    for x, y in zip(ra, rb):
+        _same(x, y, agg=True)
+
+
+def test_batch_budget_drives_smallest_prefix(pair, reader):
+    """With a budget that fits only the two smallest queries, exactly that
+    prefix is driven; the rest share the cluster job, with equal results."""
+    fd, fc = pair
+    order = _ascending(fd, BATCH_SPECS)
+    budget = order[0][0] + order[1][0]
+    want = _prefix(order, budget)
+    assert 2 <= len(want) < len(BATCH_SPECS)
+    small = FastTopK(reader, driver_max_postings=budget)
+    ra, rb = small.search_many(BATCH_SPECS), fc.search_many(BATCH_SPECS)
+    assert {i for i, x in enumerate(ra) if x.driver_served} == want
+    for x, y in zip(ra, rb):
+        _same(x, y, agg=True)
+
+
+def test_batch_busy_permits_drive_tiny_prefix_only(pair, reader):
+    """With every permit held, a batch whose total needs a permit falls
+    back to driving only its tiny prefix (cumulative ≤ budget/8)."""
+    fd, fc = pair
+    order = _ascending(fd, BATCH_SPECS)
+    total = sum(p for p, _ in order)
+    budget = max(total, 8 * order[0][0])
+    want = _prefix(order, budget // 8)
+    assert 1 <= len(want) < len(BATCH_SPECS)
+    busy = FastTopK(reader, driver_max_postings=budget)
+    assert all(x.driver_served for x in busy.search_many(BATCH_SPECS))
+    for _ in range(busy.driver_permits):
+        assert busy._driver_permits.acquire(blocking=False)
+    try:
+        ra = busy.search_many(BATCH_SPECS)
+    finally:
+        for _ in range(busy.driver_permits):
+            busy._driver_permits.release()
+    assert {i for i, x in enumerate(ra) if x.driver_served} == want
+    for x, y in zip(ra, fc.search_many(BATCH_SPECS)):
+        _same(x, y, agg=True)
+
+
+def test_batch_counts_itself_in_flight(pair, reader):
+    """search_many counts in _inflight like search(): a LARGE driven total
+    (> budget/2) needs an otherwise idle engine, so with one other call in
+    flight the batch keeps only its tiny prefix on the driver."""
+    fd, fc = pair
+    order = _ascending(fd, BATCH_SPECS)
+    budget = sum(p for p, _ in order)          # whole batch = large tier
+    want = _prefix(order, budget // 8)
+    assert len(want) < len(BATCH_SPECS)
+    eng = FastTopK(reader, driver_max_postings=budget)
+    assert all(x.driver_served for x in eng.search_many(BATCH_SPECS))
+    eng._inflight += 1                         # a concurrent caller
+    try:
+        ra = eng.search_many(BATCH_SPECS)
+    finally:
+        eng._inflight -= 1
+    assert eng._inflight == 0
+    assert {i for i, x in enumerate(ra) if x.driver_served} == want
+    for x, y in zip(ra, fc.search_many(BATCH_SPECS)):
+        _same(x, y, agg=True)
+
+
+def test_batch_read_failure_falls_back_to_cluster(pair, reader,
+                                                  monkeypatch):
+    """A failing driver point read is counted in DRIVER_TIER_FALLBACKS and
+    the batch still answers correctly from the cluster kernel."""
+    from cantine_spark.execution import wand
+
+    fd, fc = pair
+    ref = fc.search_many(BATCH_SPECS)
+
+    def boom(*a, **k):
+        raise OSError("simulated unreadable segment path")
+
+    monkeypatch.setattr(driverexec, "read_rows", boom)
+    before = wand.DRIVER_TIER_FALLBACKS
+    ra = FastTopK(reader).search_many(BATCH_SPECS)
+    assert wand.DRIVER_TIER_FALLBACKS == before + len(BATCH_SPECS)
+    assert not any(x.driver_served for x in ra)
+    for x, y in zip(ra, ref):
+        _same(x, y, agg=True)
 
 
 def test_zero_match_and_lean_concat_shapes(pair):
